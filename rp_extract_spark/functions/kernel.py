@@ -43,7 +43,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .stats import stat_features
+from .stats import stat_features, stat_features_nd
 
 # ---- constants (published psychoacoustic tables used by the reference) ----
 
@@ -113,6 +113,7 @@ def _spreading_matrix(n: int = N_BANDS) -> np.ndarray:
 
 
 SPREAD = _spreading_matrix()
+SPREAD.flags.writeable = False
 
 
 def nextpow2(n: int) -> int:
@@ -195,6 +196,7 @@ def fluctuation_curve(n: int = MOD_AMPL_LIMIT, res: float = MOD_FREQ_RES) -> np.
 
 
 FLUCT_CURVE = fluctuation_curve()
+FLUCT_CURVE.flags.writeable = False
 
 
 def _flatten_f(m: np.ndarray) -> np.ndarray:
@@ -223,8 +225,6 @@ def _pipeline(
     axis=-1, the 7-stat block via stat_features_nd. Batching across
     images amortizes the per-call numpy dispatch overhead that
     dominates at Arrow-batch granularity."""
-    from .stats import stat_features_nd
-
     h, w = gray.shape[-2], gray.shape[-1]
     if h < 2 or w < 2:
         raise ValueError(f"image too small for descriptors: {gray.shape[-2:]}")
@@ -256,12 +256,11 @@ def _from_banded(
     true audio path (which differ only in how the banded sonogram is
     produced). ``mod_freq_res`` parameterizes the fluctuation-weighting
     axis (samplerate/segment_size, rp_extract.py:730)."""
-    from .stats import stat_features_nd
-
-    w = matrix.shape[-1]
+    n_bands, w = matrix.shape[-2], matrix.shape[-1]
     # 3-6. psychoacoustic transforms
     if spectral_masking:
-        matrix = np.matmul(_spreading_matrix(matrix.shape[-2]), matrix)
+        spread = SPREAD if n_bands == N_BANDS else _spreading_matrix(n_bands)
+        matrix = np.matmul(spread, matrix)
     if do_transform_db:
         matrix = transform_db(matrix)
         if do_transform_phon:
@@ -287,7 +286,9 @@ def _from_banded(
 
     rp = mags
     if fluctuation_strength_weighting:
-        rp = rp * fluctuation_curve(mod_ampl_limit, mod_freq_res)
+        default = (mod_ampl_limit, mod_freq_res) == (MOD_AMPL_LIMIT, MOD_FREQ_RES)
+        rp = rp * (FLUCT_CURVE if default
+                   else fluctuation_curve(mod_ampl_limit, mod_freq_res))
 
     # RH option 2: band-sum AFTER fluctuation weighting
     # (extract_rh2, rp_extract.py:745-747)

@@ -80,41 +80,36 @@ def asof_join(
     matched right timestamp (null when unmatched; rows dropped instead
     when ``how='inner'``).
     """
+    if how not in ("left", "inner"):
+        raise ValueError("how must be 'left' or 'inner'")
+    if direction not in ("backward", "forward"):
+        raise ValueError("direction must be 'backward' or 'forward'")
     keys = [on] if isinstance(on, str) else list(on)
+    # one schema round trip per side: every DataFrame call below is a
+    # driver<->JVM call, and each withColumn/select an analysis pass
+    left_cols = left.columns
+    right_types = {f.name: f.dataType for f in right.schema.fields}
     if values is None:
-        values = [
-            c for c in right.columns if c not in keys and c != right_ts
-        ]
+        values = [c for c in right_types if c not in keys and c != right_ts]
     values = list(values)
 
-    rv_fields = [F.col(c).alias(c) for c in values] + [
-        F.col(right_ts).alias("__rts")
-    ]
-    left_cols = left.columns
-
+    # left rows carry no __rv; unionByName(allowMissingColumns) null-fills
+    # it with the struct type inferred from the right side
+    l_new = {"__side": F.lit(1), "__ets": F.col(left_ts)}
+    r_cols = [*keys]
     if salt > 1:
         # left rows get a deterministic bucket; right rows are
         # replicated into every bucket so each bucket sees the full
         # right timeline for its entity
-        buckets = F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        l_tag = left.withColumn(
-            "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in left_cols]), F.lit(salt))
-        )
-        r_tag = right.withColumn("__salt", buckets)
+        l_new = {"__salt": F.pmod(F.xxhash64(*left_cols), F.lit(salt)), **l_new}
+        r_cols.append(F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("__salt"))
         keys = keys + ["__salt"]
-    else:
-        l_tag, r_tag = left, right
-
-    # left rows carry no __rv; unionByName(allowMissingColumns) null-fills
-    # it with the struct type inferred from the right side
-    l_side = l_tag.withColumn("__side", F.lit(1)).withColumn(
-        "__ets", F.col(left_ts)
-    )
-    r_side = r_tag.select(
-        *[F.col(k) for k in keys],
+    l_side = left.withColumns(l_new)
+    r_side = right.select(
+        *r_cols,
         F.col(right_ts).alias("__ets"),
         F.lit(0).alias("__side"),
-        F.struct(*rv_fields).alias("__rv"),
+        F.struct(*values, F.col(right_ts).alias("__rts")).alias("__rv"),
     )
 
     u = l_side.unionByName(r_side, allowMissingColumns=True)
@@ -127,13 +122,9 @@ def asof_join(
     # frame prefix. Non-orderable value types (maps) are excluded from
     # the key — a pure-map value schema falls back to (ts, side) order
     # (the round-1 behavior) rather than failing analysis.
-    orderable = [
-        c for c in values
-        if _orderable_type(right.schema[c].dataType if c in right.columns else None)
-    ]
+    orderable = [c for c in values if _orderable_type(right_types.get(c))]
     tiebreak = (
-        [F.struct(*[F.col(f"__rv.{c}") for c in orderable] ,
-                  F.col("__rv.__rts"))]
+        [F.struct(*[f"__rv.{c}" for c in orderable], "__rv.__rts")]
         if orderable else []
     )
     if direction == "backward":
@@ -141,42 +132,36 @@ def asof_join(
         # last value seen walking forward = greatest right_ts <= ts
         w = (
             Window.partitionBy(*keys)
-            .orderBy(F.col("__ets").asc(), F.col("__side").asc(),
-                     *[t.asc_nulls_last() for t in tiebreak])
+            .orderBy("__ets", "__side", *[t.asc_nulls_last() for t in tiebreak])
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         picked = F.last("__rv", ignorenulls=True).over(w)
-    elif direction == "forward":
+    else:
         # left rows sort before right at equal ts so the equal-ts right
         # row stays inside the [current, following] frame → inclusive >=
         w = (
             Window.partitionBy(*keys)
-            .orderBy(F.col("__ets").asc(), F.col("__side").desc(),
+            .orderBy("__ets", F.col("__side").desc(),
                      *[t.desc_nulls_first() for t in tiebreak])
             .rowsBetween(Window.currentRow, Window.unboundedFollowing)
         )
         picked = F.first("__rv", ignorenulls=True).over(w)
-    else:
-        raise ValueError("direction must be 'backward' or 'forward'")
 
     joined = u.withColumn("__rv", picked).filter(F.col("__side") == 1)
+    rv = F.col("__rv")
     if tolerance_seconds is not None:
         gap = F.abs(
             F.col(left_ts).cast("timestamp").cast("long")
             - F.col("__rv.__rts").cast("timestamp").cast("long")
         )
-        joined = joined.withColumn(
-            "__rv", F.when(gap <= tolerance_seconds, F.col("__rv"))
-        )
+        rv = F.when(gap <= tolerance_seconds, rv)
     if how == "inner":
-        joined = joined.filter(F.col("__rv").isNotNull())
-    elif how != "left":
-        raise ValueError("how must be 'left' or 'inner'")
+        joined = joined.filter(rv.isNotNull())
 
-    out_vals = [
-        F.col(f"__rv.{c}").alias(f"{c}{suffix}") for c in values
-    ] + [F.col("__rv.__rts").alias(f"matched_ts{suffix}")]
-    return joined.select(*[F.col(c) for c in left_cols], *out_vals)
+    out_vals = [rv[c].alias(f"{c}{suffix}") for c in values] + [
+        rv["__rts"].alias(f"matched_ts{suffix}")
+    ]
+    return joined.select(*left_cols, *out_vals)
 
 
 def asof_join_merge(

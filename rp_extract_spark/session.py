@@ -3,11 +3,26 @@
 Local-mode defaults for the sandbox; the same settings scale to a real
 cluster (AQE, Arrow batching, sane shuffle partitioning). On a cluster
 you would additionally ship the package via ``spark-submit --py-files``.
+
+Python workers are forked from :mod:`rp_extract_spark.worker_daemon`
+rather than Spark's stock ``pyspark.daemon``. Spark puts
+``pyspark.zip``, the py4j zip and the ``spark-core`` jar on every
+worker's import path, and the worker calls ``importlib.invalidate_caches()``
+before each task, which on Python 3.11 re-reads each of those archives'
+directories: 160-250 ms of fixed cost per task, paid by every Python
+stage (``extract``, ``resume``, every ``mapInPandas``/``applyInPandas``).
+The daemon drops the jar, and Spark's zips when the installed PySpark
+imports without them, before any worker is forked; the in-task call then
+takes well under a millisecond. The daemon is used only when workers can
+import this package from a directory on disk (see ``_daemon_conf``);
+otherwise Spark's default daemon runs, as it does for sessions built
+without ``get_spark``.
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
@@ -18,6 +33,39 @@ from pyspark.sql import SparkSession
 # decoded pixels are processed per shape-group inside the UDF and
 # never materialize for the whole batch at once.
 ARROW_BATCH_ROWS = 1024
+
+DAEMON_MODULE = f"{__package__}.worker_daemon"
+
+
+def _jvm_cwd() -> str:
+    """The directory Spark starts the daemon in: the JVM's working
+    directory, which is the driver's at JVM launch, not necessarily now."""
+    from pyspark import SparkContext
+
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if proc is not None:
+        try:
+            return os.readlink(f"/proc/{proc.pid}/cwd")
+        except OSError:
+            pass
+    return os.getcwd()
+
+
+def _daemon_conf() -> dict[str, str]:
+    """``spark.python.daemon.module`` when the daemon can import this
+    package: the package is a directory on disk (not shipped in a zip)
+    whose parent is on the daemon's import path, i.e. the directory
+    ``python -m`` runs in, an entry of ``PYTHONPATH`` or a site-packages
+    directory. Empty otherwise, which keeps Spark's default daemon."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    if not os.path.isdir(pkg):
+        return {}
+    roots = [_jvm_cwd(), *site.getsitepackages(), site.getusersitepackages(),
+             *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    parent = os.path.realpath(os.path.dirname(pkg))
+    if any(r and os.path.realpath(r) == parent for r in roots):
+        return {"spark.python.daemon.module": DAEMON_MODULE}
+    return {}
 
 
 def get_spark(
@@ -50,7 +98,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra or {}).items():
+    for k, v in {**_daemon_conf(), **(extra or {})}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
