@@ -13,16 +13,15 @@ directories: 160-250 ms of fixed cost per task, paid by every Python
 stage (``extract``, ``resume``, every ``mapInPandas``/``applyInPandas``).
 The daemon drops the jar, and Spark's zips when the installed PySpark
 imports without them, before any worker is forked; the in-task call then
-takes well under a millisecond. The daemon is used only when workers can
-import this package from a directory on disk (see ``_daemon_conf``);
-otherwise Spark's default daemon runs, as it does for sessions built
-without ``get_spark``.
+takes well under a millisecond. ``get_spark`` puts the package's parent
+directory on the workers' ``PYTHONPATH``, so the daemon imports from any
+working directory; sessions built without ``get_spark`` keep Spark's
+default daemon.
 """
 
 from __future__ import annotations
 
 import os
-import site
 
 from pyspark.sql import SparkSession
 
@@ -37,35 +36,20 @@ ARROW_BATCH_ROWS = 1024
 DAEMON_MODULE = f"{__package__}.worker_daemon"
 
 
-def _jvm_cwd() -> str:
-    """The directory Spark starts the daemon in: the JVM's working
-    directory, which is the driver's at JVM launch, not necessarily now."""
-    from pyspark import SparkContext
-
-    proc = getattr(SparkContext._gateway, "proc", None)
-    if proc is not None:
-        try:
-            return os.readlink(f"/proc/{proc.pid}/cwd")
-        except OSError:
-            pass
-    return os.getcwd()
-
-
-def _daemon_conf() -> dict[str, str]:
-    """``spark.python.daemon.module`` when the daemon can import this
-    package: the package is a directory on disk (not shipped in a zip)
-    whose parent is on the daemon's import path, i.e. the directory
-    ``python -m`` runs in, an entry of ``PYTHONPATH`` or a site-packages
-    directory. Empty otherwise, which keeps Spark's default daemon."""
-    pkg = os.path.dirname(os.path.abspath(__file__))
-    if not os.path.isdir(pkg):
-        return {}
-    roots = [_jvm_cwd(), *site.getsitepackages(), site.getusersitepackages(),
-             *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
-    parent = os.path.realpath(os.path.dirname(pkg))
-    if any(r and os.path.realpath(r) == parent for r in roots):
-        return {"spark.python.daemon.module": DAEMON_MODULE}
-    return {}
+def _with_daemon(extra: dict[str, str]) -> dict[str, str]:
+    """``extra`` plus :data:`DAEMON_MODULE` as the worker daemon (unless
+    ``extra`` names another), with this package's parent directory first
+    on the workers' ``PYTHONPATH``, ahead of any value ``extra`` gives.
+    Spark merges ``spark.executorEnv.PYTHONPATH`` into the daemon's
+    ``PYTHONPATH``, so the daemon imports whatever the driver's or the
+    JVM's working directory is."""
+    key = "spark.executorEnv.PYTHONPATH"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return {
+        "spark.python.daemon.module": DAEMON_MODULE,
+        **extra,
+        key: os.pathsep.join(p for p in (root, extra.get(key)) if p),
+    }
 
 
 def get_spark(
@@ -98,7 +82,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in {**_daemon_conf(), **(extra or {})}.items():
+    for k, v in _with_daemon(extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

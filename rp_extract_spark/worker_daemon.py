@@ -34,7 +34,7 @@ from __future__ import annotations
 import fnmatch
 import os
 import sys
-from collections.abc import Iterable, Sequence
+from collections.abc import Iterable
 
 ARCHIVE_SUFFIXES = (".zip", ".jar")
 SPARK_ZIPS = ("pyspark.zip", "py4j-*-src.zip")
@@ -69,19 +69,6 @@ def dropper(spark_lib_dirs: Iterable[str], installed_ok: bool):
     return drop
 
 
-def plan_import_path(
-    path: Sequence[str],
-    cache_keys: Iterable[str],
-    spark_lib_dirs: Iterable[str],
-    installed_ok: bool,
-) -> tuple[list[str], list[str]]:
-    """Pure form of the rule: returns ``(kept path entries, importer-cache
-    keys to purge)`` for a ``sys.path`` and ``sys.path_importer_cache``
-    key list."""
-    drop = dropper(spark_lib_dirs, installed_ok)
-    return [e for e in path if not drop(e)], [k for k in cache_keys if drop(k)]
-
-
 def spark_lib_dirs() -> list[str]:
     """``$SPARK_HOME/python/lib`` as given and with symlinks resolved."""
     home = os.environ.get("SPARK_HOME")
@@ -103,18 +90,16 @@ def _installed_imports(path: list[str]) -> bool:
 def clean_import_state() -> None:
     """Apply the archive rule to this process."""
     lib_dirs = spark_lib_dirs()
-    kept, _ = plan_import_path(sys.path, (), lib_dirs, installed_ok=True)
-    installed_ok = _installed_imports(kept)
-    kept, purge = plan_import_path(
-        sys.path, list(sys.path_importer_cache), lib_dirs, installed_ok)
-    sys.path[:] = kept
-    for key in purge:
+    drop = dropper(lib_dirs, installed_ok=True)
+    if not _installed_imports([e for e in sys.path if not drop(e)]):
+        drop = dropper(lib_dirs, installed_ok=False)
+    sys.path[:] = [e for e in sys.path if not drop(e)]
+    for key in [k for k in sys.path_importer_cache if drop(k)]:
         del sys.path_importer_cache[key]
     # A namespace package found only inside a dropped archive (the jar's
     # ``org``, which the stdlib's Jython probe in ``copy``/``pickle``
     # imports) keeps its stale ``__path__``, and the next lookup under it
     # would cache a fresh importer for the archive.
-    drop = dropper(lib_dirs, installed_ok)
     for name, mod in list(sys.modules.items()):
         locations = list(getattr(mod, "__path__", None) or ())
         if (locations and getattr(mod, "__file__", None) is None

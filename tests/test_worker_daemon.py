@@ -1,6 +1,7 @@
 """Worker daemon: the archive rule, its effect on a real process, and the
 state of workers forked from it under ``get_spark``."""
 
+import json
 import os
 import subprocess
 import sys
@@ -10,7 +11,7 @@ import zipfile
 import numpy as np
 
 from rp_extract_spark import session
-from rp_extract_spark.worker_daemon import archive_of, plan_import_path
+from rp_extract_spark.worker_daemon import archive_of, dropper
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -34,8 +35,13 @@ def test_archive_of_finds_the_archive_component():
     assert archive_of("/work") is None
 
 
+def _apply(rule, path, keys):
+    """(kept path entries, importer-cache keys to purge) under ``rule``."""
+    return [e for e in path if not rule(e)], [k for k in keys if rule(k)]
+
+
 def test_rule_drops_spark_archives_when_installed_copies_import():
-    kept, purge = plan_import_path(PATH, KEYS, [LIB], installed_ok=True)
+    kept, purge = _apply(dropper([LIB], installed_ok=True), PATH, KEYS)
     assert kept == ["/work", USER_ZIP, SITE]
     assert purge == [
         PYSPARK_ZIP, f"{PYSPARK_ZIP}/pyspark", f"{PYSPARK_ZIP}/pyspark/sql",
@@ -44,20 +50,18 @@ def test_rule_drops_spark_archives_when_installed_copies_import():
 
 
 def test_rule_keeps_spark_zips_when_installed_copies_do_not_import():
-    kept, purge = plan_import_path(PATH, KEYS, [LIB], installed_ok=False)
+    kept, purge = _apply(dropper([LIB], installed_ok=False), PATH, KEYS)
     assert kept == ["/work", PYSPARK_ZIP, PY4J_ZIP, USER_ZIP, SITE]
     assert purge == [JAR, f"{JAR}/org"]
 
 
 def test_rule_only_drops_zips_under_spark_lib():
     own = ["/srv/app/pyspark.zip", "/srv/app/py4j-0.10.9.9-src.zip"]
-    kept, purge = plan_import_path(own, own, [LIB], installed_ok=True)
-    assert kept == own and purge == []
+    drop = dropper([LIB], installed_ok=True)
+    assert not any(drop(e) for e in own)
     # symlinked and resolved forms of $SPARK_HOME/python/lib both count
-    kept, _ = plan_import_path(
-        ["/srv/spark-4.1.2/python/lib/pyspark.zip"],
-        (), [LIB, "/srv/spark-4.1.2/python/lib"], installed_ok=True)
-    assert kept == []
+    drop = dropper([LIB, "/srv/spark-4.1.2/python/lib"], installed_ok=True)
+    assert drop("/srv/spark-4.1.2/python/lib/pyspark.zip")
 
 
 def test_clean_import_state_in_a_process(tmp_path):
@@ -98,17 +102,51 @@ def test_clean_import_state_in_a_process(tmp_path):
     assert out.split() == ["True", "False", "True", "False", "False"]
 
 
-def test_daemon_conf_needs_the_package_on_the_daemon_path(tmp_path, monkeypatch):
-    monkeypatch.delenv("PYTHONPATH", raising=False)
-    monkeypatch.setattr(session, "_jvm_cwd", lambda: str(tmp_path))
-    assert session._daemon_conf() == {}
-    monkeypatch.setenv("PYTHONPATH", REPO)
-    assert session._daemon_conf() == {
-        "spark.python.daemon.module": session.DAEMON_MODULE}
-    monkeypatch.delenv("PYTHONPATH")
-    monkeypatch.setattr(session, "_jvm_cwd", lambda: REPO)
-    assert session._daemon_conf() == {
-        "spark.python.daemon.module": session.DAEMON_MODULE}
+def test_session_conf_puts_the_package_on_the_worker_path():
+    conf = session._with_daemon({})
+    assert conf["spark.python.daemon.module"] == session.DAEMON_MODULE
+    assert conf["spark.executorEnv.PYTHONPATH"] == REPO
+    conf = session._with_daemon({"spark.executorEnv.PYTHONPATH": "/deps",
+                                 "spark.python.daemon.module": "pyspark.daemon"})
+    assert conf["spark.executorEnv.PYTHONPATH"] == os.pathsep.join([REPO, "/deps"])
+    assert conf["spark.python.daemon.module"] == "pyspark.daemon"
+
+
+def test_daemon_starts_where_the_package_is_not_on_the_default_path(tmp_path):
+    """A driver that runs outside the repository, with no ``PYTHONPATH``
+    and ``PYTHONSAFEPATH`` set, so neither the JVM's working directory nor
+    the environment lets a worker import the package: Python stages still
+    run, forked from the package's daemon."""
+    script = textwrap.dedent(f"""
+        import json, sys
+        sys.path.insert(0, {REPO!r})
+        from rp_extract_spark.session import get_spark
+
+        def probe(_):
+            import sys, zipimport
+            import rp_extract_spark
+            yield (rp_extract_spark.__file__, sorted(
+                k for k, v in sys.path_importer_cache.items()
+                if isinstance(v, zipimport.zipimporter)))
+
+        spark = get_spark("daemon-cwd", cores=1, shuffle_partitions=1,
+                          extra={{"spark.driver.memory": "1g",
+                                  "spark.ui.showConsoleProgress": "false"}})
+        try:
+            out = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
+            print(json.dumps([spark.conf.get("spark.python.daemon.module"), *out[0]]))
+        finally:
+            spark.stop()
+    """)
+    env = {**os.environ, "PYTHONSAFEPATH": "1"}
+    env.pop("PYTHONPATH", None)
+    proc = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
+                          capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    daemon, pkg_file, zip_keys = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert daemon == session.DAEMON_MODULE
+    assert pkg_file.startswith(REPO + os.sep)
+    assert not any(archive_of(k).lower().endswith(".jar") for k in zip_keys)
 
 
 def _worker_import_state(_):

@@ -7,7 +7,7 @@ time ``importlib.invalidate_caches()`` takes inside a task — the call
 the PySpark worker makes before every task, which the package's worker
 daemon (``rp_extract_spark.worker_daemon``) makes cheap.
 
-Usage (from the repository root, so that workers can import the package):
+Usage:
     python tools/worker_overhead.py                 # get_spark as shipped
     python tools/worker_overhead.py --stock-daemon  # Spark's pyspark.daemon
 """
@@ -22,6 +22,10 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+JOBS = 20  # measured jobs
+WARMUP = 3  # untimed jobs first: worker start-up and imports
+CORES = 4  # local[CORES]; one task per core
 
 
 def _probe(batches):
@@ -40,9 +44,6 @@ def _probe(batches):
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--jobs", type=int, default=20)
-    ap.add_argument("--warmup", type=int, default=3)
-    ap.add_argument("--cores", type=int, default=4)
     ap.add_argument("--stock-daemon", action="store_true",
                     help="run Spark's default pyspark.daemon for comparison")
     args = ap.parse_args()
@@ -52,21 +53,21 @@ def main() -> None:
     extra = {"spark.driver.memory": "2g", "spark.ui.showConsoleProgress": "false"}
     if args.stock_daemon:
         extra["spark.python.daemon.module"] = "pyspark.daemon"
-    spark = get_spark("worker-overhead", cores=args.cores,
-                      shuffle_partitions=args.cores, extra=extra)
+    spark = get_spark("worker-overhead", cores=CORES, shuffle_partitions=CORES,
+                      extra=extra)
     try:
-        df = spark.range(0, 4, numPartitions=4)
+        df = spark.range(0, CORES, numPartitions=CORES)
         delays, invalidations = [], []
-        for i in range(args.warmup + args.jobs):
+        for i in range(WARMUP + JOBS):
             t0 = time.time()
             rows = df.mapInPandas(
                 _probe, "started double, invalidate_s double").collect()
-            if i >= args.warmup:
+            if i >= WARMUP:
                 delays += [r.started - t0 for r in rows]
                 invalidations += [r.invalidate_s for r in rows]
         print(json.dumps({
             "daemon": spark.conf.get("spark.python.daemon.module", "pyspark.daemon"),
-            "jobs": args.jobs,
+            "jobs": JOBS,
             "submit_to_udf_s_p50": round(statistics.median(delays), 4),
             "invalidate_caches_ms_p50": round(
                 statistics.median(invalidations) * 1e3, 3),
